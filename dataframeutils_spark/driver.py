@@ -616,8 +616,10 @@ def q_data_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pipeline_prepare(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end corpus preparation (quality filter → language filter
     → exact dedup → split assignment) composed as ONE plan: a single
-    scan projection feeds scan-side filters, then one hash-key shuffle
-    for dedup — the full pretraining-prep pass, exactly oracle-checked."""
+    projection over the pruned scan computes every feature and the gate
+    once, one hash-key shuffle of narrow rows feeds the dedup window,
+    and the gate filters above it — the full pretraining-prep pass,
+    exactly oracle-checked."""
     return pipeline.prepare_corpus_summary(load_table(spark, sf_dir, "documents"))
 
 

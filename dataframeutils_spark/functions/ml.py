@@ -172,6 +172,15 @@ def _sample_skew_kurt(v: np.ndarray) -> tuple[float, float]:
     return G1, G2
 
 
+def _logistic(x: float) -> float:
+    """1 / (1 + e^-x), with its exact double limit 0.0 where e^-x
+    overflows (x < -709)."""
+    try:
+        return 1.0 / (1.0 + math.exp(-x))
+    except OverflowError:
+        return 0.0
+
+
 def garch_fit(x: np.ndarray, model: str = "GARCH", o: int = 0):
     """Constant-mean GARCH(1,1)-family MLE with normal innovations.
 
@@ -216,12 +225,19 @@ def garch_fit(x: np.ndarray, model: str = "GARCH", o: int = 0):
             s2[t] = max(s2[t], 1e-300)
         return e, s2
 
-    def negllf(theta):
+    def params_of(theta):
         mu, lw, la, lg, lb = theta
         omega = math.exp(lw)
-        alpha = math.exp(la) if egarch else 1.0 / (1.0 + math.exp(-la)) * 0.5
-        gamma = lg if egarch else (1.0 / (1.0 + math.exp(-lg)) * 0.5 if use_o else 0.0)
-        beta = 1.0 / (1.0 + math.exp(-lb)) * (0.999 if egarch else 1.0)
+        alpha = math.exp(la) if egarch else _logistic(la) * 0.5
+        gamma = lg if egarch else (_logistic(lg) * 0.5 if use_o else 0.0)
+        beta = _logistic(lb) * (0.999 if egarch else 1.0)
+        return mu, omega, alpha, gamma, beta
+
+    def negllf(theta):
+        try:
+            mu, omega, alpha, gamma, beta = params_of(theta)
+        except OverflowError:  # exp(lw) (or EGARCH's exp(la)) beyond double range
+            return 1e12
         if not egarch and alpha + beta + 0.5 * gamma * use_o >= 0.9999:
             return 1e12
         e, s2 = sigma2_path((mu, omega, alpha, gamma, beta))
@@ -229,11 +245,7 @@ def garch_fit(x: np.ndarray, model: str = "GARCH", o: int = 0):
 
     theta0 = np.array([mu0, math.log(v0 * 0.05), math.log(0.1) if egarch else 0.0 - 1.4, -1.4, 1.4])
     theta, nll = nelder_mead(negllf, theta0, max_iter=3000)
-    mu, lw, la, lg, lb = theta
-    omega = math.exp(lw)
-    alpha = math.exp(la) if egarch else 1.0 / (1.0 + math.exp(-la)) * 0.5
-    gamma = lg if egarch else (1.0 / (1.0 + math.exp(-lg)) * 0.5 if use_o else 0.0)
-    beta = 1.0 / (1.0 + math.exp(-lb)) * (0.999 if egarch else 1.0)
+    mu, omega, alpha, gamma, beta = params_of(theta)
     e, s2 = sigma2_path((mu, omega, alpha, gamma, beta))
     llf = -nll
     k = 3 + use_o + (1 if egarch else 0)

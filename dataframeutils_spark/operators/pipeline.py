@@ -7,13 +7,17 @@ operators composed the way a pretraining pipeline chains them:
     quality score -> language filter -> exact dedup -> split assignment
 
 The point of shipping the composition (and not just the stages) is the
-plan shape: quality and language ID are evaluated inside a SINGLE scan
-projection (``text_stat_columns``/``language_id_columns`` — no
-self-joins of per-doc operator outputs on doc_id), the quality/language
-filters run scan-side BEFORE the only shuffle (the dedup hash), and the
-split assignment is again a projection. At 100 TB the whole pipeline is
-one pass over the corpus plus one 32-byte-key shuffle of the
-FILTER-SURVIVING docs only.
+plan shape: quality, language ID, repetition and the content hash are
+evaluated ONCE, inside a single projection over the pruned scan
+(``text_stat_columns``/``language_id_columns``/``repetition_columns``
+— no self-joins of per-doc operator outputs on doc_id). The gate is a
+boolean column of that projection and is applied above the dedup
+window, where the optimizer cannot push it back under the projection
+and re-derive every feature in a Filter. The only shuffle is the dedup
+hash, carrying narrow per-doc rows (id, md5, features — never text),
+and the split assignment is again a projection. At 100 TB the whole
+pipeline is one pass over the corpus plus one shuffle of those narrow
+rows.
 
 Every stage is engine-portable, so the full composition is exactly
 DuckDB-oracle-checkable end to end — filters use quality rounded to 6
@@ -55,8 +59,12 @@ def prepare_corpus(
     <= ``max_repetition`` (degenerate-text gate; ``None`` disables),
     and it is the canonical (min-id) copy of its exact-duplicate group
     *among survivors* — dedup after filtering, as pipelines run it (a
-    high-quality dup of a filtered-out doc must survive). All three
-    heuristic gates evaluate inside the same scan projection.
+    high-quality dup of a filtered-out doc must survive).
+
+    Every feature is computed once, in one projection that also hashes
+    the text. The gate is a column of that projection (``__keep``); the
+    window takes the minimum kept id per hash, and ``__keep AND doc_id =
+    keep_id`` filters above the window.
     """
     from dataframeutils_spark.operators.text import repetition_columns
 
@@ -74,7 +82,7 @@ def prepare_corpus(
     )
     enriched = tokd.select(
         "doc_id",
-        "text",
+        F.md5(F.col("text")).alias("__h"),
         F.round(stats["quality"], QUALITY_DECIMALS).alias("quality"),
         stats["n_chars"].alias("n_chars"),
         lang["lang_pred"].alias("lang_pred"),
@@ -83,13 +91,17 @@ def prepare_corpus(
     gate = (F.col("quality") >= min_quality) & F.col("lang_pred").isin(*langs)
     if max_repetition is not None:
         gate = gate & (F.col("rep_ratio") <= max_repetition)
-    filtered = enriched.filter(gate)
     # keep-first exact dedup among survivors: one shuffle keyed on the
-    # 32-hex md5, never on text
-    w = Window.partitionBy(F.md5(F.col("text")))
+    # 32-hex md5, never on text. Catalyst pushes a filter below a Window
+    # only for predicates on the partition key, so filtering on __keep
+    # above it cannot re-derive the features under the projection
+    w = Window.partitionBy("__h")
     kept = (
-        filtered.withColumn("keep_id", F.min("doc_id").over(w))
-        .filter(F.col("doc_id") == F.col("keep_id"))
+        enriched.withColumn("__keep", gate)
+        .withColumn(
+            "keep_id", F.min(F.when(F.col("__keep"), F.col("doc_id"))).over(w)
+        )
+        .filter(F.col("__keep") & (F.col("doc_id") == F.col("keep_id")))
     )
     split = _bucket(F.col("doc_id"), salt, portable)
     return kept.select(

@@ -64,10 +64,11 @@ def events_bins_input(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics: ties on timestamp keep original row order —
     ``weighted_bin_calculator.py:62``).
 
-    The driver's events.parquet stores ``ts`` as parquet timestamp[ns],
-    which Spark rejects; we read nanos as long and floor-truncate to
-    microseconds — exactly what DuckDB does when it reads the same file,
-    so both engines see identical timestamps (and identical tie sets).
+    The driver's events.parquet stores ``ts`` as parquet timestamp[us],
+    which Spark reads as a timestamp. A file written with timestamp[ns]
+    is rejected by Spark, so we read nanos as long and floor-truncate
+    to microseconds — exactly what DuckDB does when it reads the same
+    file, so both engines see identical timestamps (and tie sets).
 
     Quantities are fixed-point *milli-units* (``round(value·1000)`` —
     integer-valued doubles): every cumulative sum and bin-boundary

@@ -69,6 +69,15 @@ def test_garch_variants_fit(model):
     assert (fit["cond_vol"] > 0).all()
 
 
+def test_garch_survives_logistic_overflow():
+    """Low-variance data drives the ARCH logit below -709, where
+    exp(-x) overflows; the logistic map must take its 0.0 limit."""
+    x = np.random.default_rng(0).standard_normal(150) * 0.01 + 0.05
+    fit = ml.garch_fit(x)
+    assert np.isfinite(fit["llf"])
+    assert (fit["cond_vol"] > 0).all()
+
+
 def test_gjr_detects_leverage_asymmetry():
     """Simulate a GJR process (negative shocks raise vol more) and a
     symmetric GARCH process: the fitted asymmetry term must be clearly

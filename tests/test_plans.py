@@ -6,6 +6,8 @@ machine; plan shapes don't.)"""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -28,6 +30,22 @@ def test_pipeline_prepare_is_single_scan_no_joins(spark):
         assert join not in plan, f"unexpected {join} in pipeline plan"
     # column pruning: the scan must read only the two needed columns
     assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan
+
+
+def test_pipeline_prepare_evaluates_features_once(spark):
+    """The quality/language/repetition gate must not be pushed below the
+    projection that computes those features: a Filter carrying a
+    higher-order function or regexp_extract_all re-derives them per row."""
+    from dataframeutils_spark.operators import pipeline
+
+    plan = _plan(pipeline.prepare_corpus(load_table(spark, SF_DIR, "documents")))
+    filters = [
+        line for line in plan.splitlines()
+        if re.match(r"^[\s:+\-|]*(?:\*\(\d+\) )?Filter ", line)
+    ]
+    assert filters, "the dedup filter is missing from the pipeline plan"
+    for line in filters:
+        assert "lambdafunction" not in line and "regexp_extract_all" not in line, line[:200]
 
 
 def test_text_projections_have_no_exchange(spark):

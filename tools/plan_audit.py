@@ -17,6 +17,13 @@ Notes on reading the table:
   FlatMapGroupsInPandas / MapInPandas / FlatMapCoGroupsInPandas) —
   row-at-a-time PythonUDF never appears (asserted: the tool exits
   nonzero if it does).
+- feature_filters counts Filter nodes whose condition carries a
+  higher-order function (``lambdafunction``) or ``regexp_extract_all``,
+  with their total condition length in characters: per-row text
+  features the optimizer pushed below the projection that computes
+  them, so each row evaluates them twice. Short token-length
+  predicates are cheap; a multi-kilochar condition is a feature stack
+  paid twice.
 - streaming queries execute a real micro-batch drain when constructed,
   so their row reflects the batch result's plan, not the stream's.
 
@@ -25,6 +32,7 @@ Usage: python tools/plan_audit.py [sf_dir] [out_md]
 from __future__ import annotations
 
 import os
+import re
 import sys
 import time
 
@@ -39,6 +47,19 @@ PYTHON_STAGES = (
     "MapInPandas",
     "FlatMapCoGroupsInPandas",
 )
+
+FEATURE_MARKERS = ("lambdafunction", "regexp_extract_all")
+FILTER_NODE = re.compile(r"^[\s:+\-|]*(?:\*\(\d+\) )?Filter ")
+
+
+def feature_filters(plan: str) -> tuple[int, int]:
+    """(count, total chars) of Filter nodes re-deriving text features."""
+    hits = [
+        line
+        for line in plan.splitlines()
+        if FILTER_NODE.match(line) and any(m in line for m in FEATURE_MARKERS)
+    ]
+    return len(hits), sum(len(line.strip()) for line in hits)
 
 
 def main() -> int:
@@ -63,7 +84,7 @@ def main() -> int:
         try:
             plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
         except Exception as e:  # noqa: BLE001 - audit must cover every row
-            rows.append((name, "ERR", "", "", "", str(e)[:60]))
+            rows.append((name, "ERR", "", "", "", "", str(e)[:60]))
             continue
         ex = plan.count("Exchange")
         bhj = plan.count("BroadcastHashJoin")
@@ -76,7 +97,9 @@ def main() -> int:
         joins = f"{bhj}B/{smj}S" + (f"/{bnl}N" if bnl else "") + (
             f"/{cart}X" if cart else ""
         )
-        rows.append((name, ex, joins, py, round(time.time() - t0, 2), ""))
+        n_ff, ff_chars = feature_filters(plan)
+        ff = f"{n_ff} ({ff_chars})" if n_ff else "0"
+        rows.append((name, ex, joins, py, ff, round(time.time() - t0, 2), ""))
 
     with open(OUT, "w") as fh:
         fh.write(
@@ -86,9 +109,9 @@ def main() -> int:
             "python = Arrow-batched stages (row-at-a-time PythonUDF is asserted\n"
             "absent; codegen spans are an execution-time AQE decision, so they\n"
             "are not listed for these lazy plans). See the module docstring for\n"
-            "how to read exchange counts.\n\n"
-            "| query | exchanges | joins | python | plan_s | err |\n"
-            "|---|---|---|---|---|---|\n"
+            "how to read exchange counts and feature_filters (`<n> (<chars>)`).\n\n"
+            "| query | exchanges | joins | python | feature_filters | plan_s | err |\n"
+            "|---|---|---|---|---|---|---|\n"
         )
         for r in rows:
             fh.write("| " + " | ".join(str(x) for x in r) + " |\n")
